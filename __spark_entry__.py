@@ -3388,141 +3388,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return tpch.q5_local_supplier(spark, "/root/testdata/sf0.001")
 
 
-# The driver correctness gate re-proves only the FIRST 50 `queries()`
-# entries each round (measured: every CORRECTNESS_r*.json has exactly
-# 50 rows), so the registry order IS the gate plan. Round 7's
-# postmortem showed a hand-maintained window list goes stale the moment
-# the driver commits a new CORRECTNESS artifact (the evidence-age test
-# fired, by design, the instant CORRECTNESS_r07.json landed); from
-# round 8 the order is COMPUTED from the committed artifacts instead:
-#
-#   1. `_GATE_OVERRIDE` — the only hand-maintained piece: queries whose
-#      plan or oracle changed this round and must re-gate regardless of
-#      evidence age;
-#   2. every query the driver has never seen green (must gate in its
-#      first round), registry order;
-#   3. everything else oldest-evidence-first (latest green round
-#      ascending), ties broken by registry insertion order.
-#
-# Rotation is therefore a no-op commit: when the driver lands
-# CORRECTNESS_r{N}.json, the next import re-ranks the stalest cohort to
-# the head automatically. tools/evidence_age.py (run by
-# tests/test_evidence_age.py on every pytest run) still independently
-# verifies the resulting window keeps every query inside the ≤4-round
-# evidence budget, and tests/test_oracle_parity.py hash-checks every
-# queued-out entry against DuckDB at sf0.001 on every pytest run.
-# Gate-slot budget note: at 196 registered queries the steady-state
-# refresh cadence is 196/50 ≈ 3.9 rounds against the 4-round evidence
-# budget — at capacity (the round-10 additions consumed the remaining
-# headroom deliberately: 12 new ≤ the 15 the r10 window could absorb
-# while re-gating all 35 r6-evidence queries; evidence_age.check()
-# verifies the arithmetic every pytest run). Net-new oracle queries
-# must now be ~zero-sum; pytest-only components (streaming, layout,
-# multimodal) cost no slots.
-# Each entry is (query, round_added): the query leads the window until
-# the driver records green evidence FROM that round or later, then the
-# entry expires by itself — no end-of-round cleanup to forget (evidence
-# age alone can't expire an override: the old evidence predating the
-# plan change is exactly why the override exists).
-_GATE_OVERRIDE: list[tuple[str, int]] = [
-    # round 8: dq_checks' plan changed (NULL-parent-PK guard in the
-    # single-pass FK fold — see plans/quality.py), so it re-gates ahead
-    # of the evidence-age ranking.
-    ("dq_checks", 8),
-    # round 10: doc_mad_outliers' plan changed (NULL n_chars excluded
-    # before the rank — the adversarial-warehouse probe caught a silent
-    # median shift from opposite NULL ordering), so its r9 evidence is
-    # stale and it re-gates ahead of the ranking. Window still fits:
-    # 1 override + 12 never-gated + 35 r6-evidence + 2 r7 spares = 50.
-    ("doc_mad_outliers", 10),
-    # round 11: both plan-overhead diets re-gate — doc_mad_outliers
-    # moved from two two-phase global_rank passes to a single value
-    # histogram, source_kl_divergence from a cached token explode +
-    # global_rank top-k to one (source, term) aggregate + TakeOrdered.
-    # Values are proven unchanged locally (check_oracle at
-    # sf0.001/sf0.01 against the UNCHANGED oracles), but a plan
-    # rewrite is exactly what the override exists for. Window fits:
-    # 2 overrides + 47 r7-evidence + 1 oldest-r8 = 50 (the other two
-    # r8 queries re-gate in r12, inside the 4-round budget).
-    ("doc_mad_outliers", 11),
-    ("source_kl_divergence", 11),
-    # round 13: part_substitutes' plan-construction no longer runs a
-    # Spark job (parquet-footer row estimate replaces cgrid.count() —
-    # advisor item); the sf0.01 physical plan is unchanged and values
-    # cannot depend on a repartition count, but the query code changed
-    # so it re-gates ahead of the ranking. Window fits exactly:
-    # 1 never-gated (lsh_index_roundtrip) + 1 override + 48 r9 = 50.
-    ("part_substitutes", 13),
-]
-
-
-def _latest_green_rounds() -> dict[str, int]:
-    """query -> latest round whose committed CORRECTNESS_r*.json row is
-    green (rows+schema true; hash true, or None for the rows-only
-    checks the driver records for non-SQL-expressible queries)."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)", os.path.basename(f))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(f) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for q, row in rows.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-            ):
-                latest[q] = max(latest.get(q, 0), rnd)
-    return latest
-
-
-def _compute_gate_order(latest: dict[str, int] | None = None) -> list[str]:
-    # `latest` is injectable so tests can replay the policy forward
-    # (synthetic future artifacts) and prove the window can never let
-    # evidence age out, not just that today's order happens to be safe.
-    if latest is None:
-        latest = _latest_green_rounds()
-    registry = list(_QUERIES)
-    pos = {q: i for i, q in enumerate(registry)}
-    # a query can legitimately appear in _GATE_OVERRIDE once per round
-    # that changed it (doc_mad_outliers: r10 NULL-ordering fix, r11
-    # plan diet) — with old-enough evidence several entries fire at
-    # once, but the query holds ONE window slot, not one per entry
-    head, in_head = [], set()
-    for q, round_added in _GATE_OVERRIDE:
-        if q in pos and latest.get(q, -1) < round_added and q not in in_head:
-            head.append(q)
-            in_head.add(q)
-    rest = sorted(
-        (q for q in registry if q not in in_head),
-        key=lambda q: (latest.get(q, -1), pos[q]),
-    )
-    return head + rest
-
-
-_GATE_FIRST = _compute_gate_order()
-
-
-def _gate_order(d: dict) -> dict:
-    first = {k: d[k] for k in _GATE_FIRST if k in d}
-    rest = {k: v for k, v in d.items() if k not in first}
-    return {**first, **rest}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _gate_order(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _gate_order(_ORACLE)
+    return dict(_ORACLE)

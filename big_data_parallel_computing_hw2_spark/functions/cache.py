@@ -6,7 +6,7 @@ unless persisted (measured on the simhash sketch and the ann_lsh
 bucket table). But a registered query can't unpersist after "the
 action": it returns a lazy DataFrame the driver collects later.
 Leaving every persist live leaks cached blocks across repeated
-invocations (bench runs each query 3×) until LRU eviction.
+invocations (a warm session re-runs each query) until LRU eviction.
 
 `bounded_cache` bounds that to ONE live cache per (operator, slot)
 key: re-invoking the operator unpersists the previous round's block
@@ -48,8 +48,8 @@ def _drop(old: DataFrame | None) -> None:
     try:
         old.unpersist(blocking=False)
     except Exception:
-        # the holder's SparkSession was stopped (bench's core-count
-        # sweep restarts sessions); its blocks died with the context
+        # the holder's SparkSession was stopped; its blocks died with
+        # the context
         pass
 
 
@@ -71,11 +71,11 @@ def bounded_cache(key: str, df: DataFrame) -> DataFrame:
     return df
 
 
-# Memo-event journal: (slot, "build" | "hit"), appended by
-# iterative_memo and memo_collect. bench.py snapshots it around each
-# query's timed reps so bench_latest.json can flag which per-query
-# numbers ride memoized state (VERDICT r13 item 6: a memoized trainer's
-# best-of-3 otherwise silently measures a checkpoint read).
+# Memo-event journal: (slot, "build" | "hit" | "uncacheable"), appended by
+# iterative_memo and memo_collect. perfbench slices it around each
+# request to report memo hits and builds, so a timing that rides
+# memoized state shows as such (VERDICT r13 item 6: a memoized
+# trainer's repeat run otherwise silently measures a checkpoint read).
 MEMO_LOG: list[tuple[str, str]] = []
 
 _ITER_MEMO: dict[tuple, DataFrame] = {}
@@ -126,8 +126,8 @@ def iterative_memo(key: str, scope: str, build) -> DataFrame:
     the SAME shallow DataFrame. Values are unchanged — the checkpoint
     stores exactly what the deterministic builder computed, so oracle
     parity is unaffected. The memo re-builds if the holder's
-    SparkSession has been stopped (bench's core-count sweep restarts
-    sessions) or — when ``scope`` is a data directory — if the files
+    SparkSession has been stopped (a process that stops and rebuilds its
+    session) or — when ``scope`` is a data directory — if the files
     under it changed (mtime/size fingerprint)."""
     memo_key = (key, scope, _scope_fingerprint(scope))
     df = _ITER_MEMO.get(memo_key)
@@ -168,11 +168,15 @@ _ROWS_MEMO_CAP = 1024  # tiny rows (boundary arrays); cap is a leak guard
 
 def _input_fingerprint(df: DataFrame):
     """(path, mtime_ns, size) for every input file of the plan, or None
-    when the files can't be enumerated. A None fingerprint still memoizes
+    when the plan has no file source. A None fingerprint still memoizes
     safely: plans whose data is NOT visible in the canonicalized plan
     (RDD-backed relations) never canonicalize equal across builds, so
     their semantic hash alone already distinguishes them; plans whose
-    data IS in the plan (LocalRelation) are covered by the hash."""
+    data IS in the plan (LocalRelation) are covered by the hash.
+
+    Raises OSError when an input file can't be stat'ed (a remote URI
+    such as hdfs:// or s3a://, or a file deleted mid-listing): its
+    contents could change without the fingerprint changing."""
     import os
 
     try:
@@ -186,10 +190,7 @@ def _input_fingerprint(df: DataFrame):
             if p.startswith(pre):
                 p = p[len(pre):]
                 break
-        try:
-            st = os.stat(p)
-        except OSError:
-            return None
+        st = os.stat(p)
         fps.append((p, st.st_mtime_ns, st.st_size))
     return tuple(fps)
 
@@ -206,15 +207,20 @@ def memo_collect(slot: str, df: DataFrame) -> list:
     Keyed on (slot, analyzed-plan semantic hash, input-file fingerprint):
     the same sketch over the same files returns the saved rows without a
     Spark job (the sketch job otherwise re-runs on every invocation —
-    bench.py alone invokes each query 3×); regenerated data at the same
-    path changes the fingerprint and rebuilds. Process-scoped, dies with
-    the interpreter — same discipline as iterative_memo (no cross-run
+    perfbench's warm query mix repeats each query every cycle);
+    regenerated data at the same path changes the fingerprint and
+    rebuilds. A plan reading a file that can't be stat'ed is collected
+    every time, never memoized. Process-scoped, dies with the
+    interpreter — same discipline as iterative_memo (no cross-run
     artifacts)."""
     h = _sem_hash(df)
-    if h is None:
+    try:
+        mk = None if h is None else (slot, h, _input_fingerprint(df))
+    except OSError:
+        mk = None
+    if mk is None:
         MEMO_LOG.append((slot, "uncacheable"))
         return df.collect()
-    mk = (slot, h, _input_fingerprint(df))
     rows = _ROWS_MEMO.get(mk)
     if rows is not None:
         MEMO_LOG.append((slot, "hit"))

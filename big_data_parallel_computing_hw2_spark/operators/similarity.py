@@ -263,10 +263,10 @@ def planes_for(
 
     A re-tune is NOT transparent: bucket ids are b-dependent, so every
     registered LSH-family query's plan AND oracle change together
-    (the mirrored `_planes`/`_sql_buckets` constants) — by design that
-    forces a `_GATE_OVERRIDE` entry and a fresh CORRECTNESS round for
-    the family, plus an L re-pick against lsh_recall_estimate (more
-    bits at fixed L lowers recall)."""
+    (the mirrored `_planes`/`_sql_buckets` constants), and
+    tests/test_oracle_parity.py re-checks every one of them against
+    its oracle; it also needs an L re-pick against lsh_recall_estimate
+    (more bits at fixed L lowers recall)."""
     if n_vectors <= 0:
         return PLANES_PER_TABLE
     need = (

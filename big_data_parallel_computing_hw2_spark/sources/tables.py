@@ -28,8 +28,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Catalog-style relation cache: `spark.read.parquet` costs ~65 ms of
 # driver time per call (footer/schema inference + py4j), paid on EVERY
 # plan build — and the bench/driver rebuild each query's plan from

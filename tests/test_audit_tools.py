@@ -36,27 +36,6 @@ def test_scaling_sf_dirs_exist():
         assert sf > 0
 
 
-def test_bench_prior_round_lookup_and_mover_threshold():
-    """bench.py's in-band exoneration: the prior-bench resolver picks
-    the NEWEST committed bench_r{N}.json (numeric, not lexicographic —
-    r10 > r9), and its per-query map + sf travel with it so the mover
-    comparison can refuse cross-SF noise."""
-    import bench
-
-    name, queries, sf = bench._prior_bench()
-    assert name is not None and name.startswith("bench_r")
-    n = int(name.removeprefix("bench_r").removesuffix(".json"))
-    others = [
-        int(f.removeprefix("bench_r").removesuffix(".json"))
-        for f in os.listdir(REPO)
-        if f.startswith("bench_r") and f.endswith(".json")
-        and f.removeprefix("bench_r").removesuffix(".json").isdigit()
-    ]
-    assert n == max(others)
-    assert isinstance(queries, dict) and len(queries) > 100
-    assert sf == 0.1
-
-
 def test_make_sf1_rekey_is_disjoint_and_fk_consistent():
     """The sf1 generator's key map (key*REPS + rep) keeps replicas
     key-disjoint and referential integrity exact, and the same table

@@ -298,11 +298,11 @@ def test_approx_knn_recall(spark, sf_dir):
 
 def test_no_persist_accumulation_across_invocations(spark, sf_dir):
     """bounded_cache/iterative_memo must bound live cached blocks across
-    repeated invocations (bench runs every query 3×): after a warm-up
-    round, two more full invocations of the persist-heavy operators may
-    not grow the JVM's persistent-RDD set. localCheckpoint blocks are
-    released by ContextCleaner on driver GC, so poll through a
-    System.gc() before declaring a leak."""
+    repeated invocations (a warm session re-runs every query): after a
+    warm-up round, two more full invocations of the persist-heavy
+    operators may not grow the JVM's persistent-RDD set. localCheckpoint
+    blocks are released by ContextCleaner on driver GC, so poll through
+    a System.gc() before declaring a leak."""
     import time
 
     def run_once():

@@ -234,3 +234,29 @@ def test_memo_collect_hits_and_invalidates(spark, tmp_path):
     events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.slot"]
     assert events == ["build", "hit", "build"]
     assert r3 != r1
+
+
+def test_memo_collect_skips_plans_with_unstatable_inputs(spark, tmp_path):
+    """A plan whose input file can't be stat'ed (a remote URI, or a file
+    deleted mid-listing) is never memoized: its contents could change
+    without the fingerprint changing, so every call collects again."""
+    from big_data_parallel_computing_hw2_spark.functions import cache
+
+    p = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,), (2,)], "x int").write.parquet(p)
+    df = spark.read.parquet(p).agg(
+        F.percentile_approx("x", [0.5], 100).alias("b")
+    )
+    collects = []
+    real_collect = df.collect
+    df.inputFiles = lambda: ["hdfs://namenode/warehouse/t.parquet/part-0"]
+    df.collect = lambda: collects.append(1) or real_collect()
+
+    n0 = len(cache.MEMO_LOG)
+    r1 = cache.memo_collect("test.remote_slot", df)
+    r2 = cache.memo_collect("test.remote_slot", df)
+    assert r2 == r1
+    assert len(collects) == 2
+    events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.remote_slot"]
+    assert events == ["uncacheable", "uncacheable"]
+    assert not any(k[0] == "test.remote_slot" for k in cache._ROWS_MEMO)

@@ -5,11 +5,6 @@ NULL keys, multi-version updates, deletes of absent keys —
 reference model of MERGE. The Spark plan (full-outer join + version
 compaction) and the dict-based model share no code, so agreement under
 hypothesis exploration is real evidence, not tautology.
-
-Also pins the gate-order policy (`_compute_gate_order`) over arbitrary
-evidence maps: overrides lead, never-gated queries precede everything
-ranked, ranking is oldest-first, and the order is always a permutation
-of the registry.
 """
 
 from __future__ import annotations
@@ -102,40 +97,3 @@ def test_merge_upsert_equals_reference_model(spark, snapshot, delta):
     )
     assert got == _reference_merge(snapshot, delta)
 
-
-_EVIDENCE = st.dictionaries(
-    st.sampled_from([f"q{i}" for i in range(12)]),
-    st.integers(min_value=1, max_value=9),
-    max_size=12,
-)
-
-
-@given(latest=_EVIDENCE)
-@settings(max_examples=100, deadline=None)
-def test_gate_order_policy_invariants(latest):
-    import __spark_entry__ as entry_mod
-
-    registry = list(entry_mod._QUERIES)
-    # restrict the synthetic evidence to real registry names so the
-    # injected map is shaped like a CORRECTNESS artifact
-    synth = {
-        registry[i * 7 % len(registry)]: r
-        for i, (_, r) in enumerate(sorted(latest.items()))
-    }
-    order = entry_mod._compute_gate_order(synth)
-    assert sorted(order) == sorted(registry), "must be a permutation"
-    # mirror the policy: several override entries for one query (one
-    # per round that changed it) may fire together under old evidence,
-    # but the query holds exactly one window slot
-    head, seen = [], set()
-    for q, rnd in entry_mod._GATE_OVERRIDE:
-        if q in set(registry) and synth.get(q, -1) < rnd and q not in seen:
-            head.append(q)
-            seen.add(q)
-    assert order[: len(head)] == head, "unexpired overrides lead"
-    tail = order[len(head):]
-    ranks = [synth.get(q, -1) for q in tail]
-    assert ranks == sorted(ranks), "oldest evidence first"
-    # never-gated queries (rank -1) all precede any ranked query
-    if -1 in ranks and any(r != -1 for r in ranks):
-        assert ranks.index(max(ranks)) > len([r for r in ranks if r == -1]) - 1

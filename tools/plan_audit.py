@@ -103,13 +103,11 @@ def main() -> None:
     print()
     print("| query | scans | scan cols | exchanges | bcast joins | SMJ | pushed filters | cart | topk | cached | rdd |")
     print("| --- | --- | --- | --- | --- | --- | --- | --- | --- | --- | --- |")
-    # REGISTRY order, not gate order: queries() rotates with the gate
-    # window each round, and plan shapes of cache-consumer queries
-    # depend on which earlier query warmed a shared bounded_cache slot
-    # — a rotating audit order made the cross-round plan_regression
-    # fence flag phantom exchange diffs (round-12 postmortem). The
-    # registry insertion order is stable across rounds, so the
-    # committed PLANS.md rows stay comparable.
+    # Registry insertion order: plan shapes of cache-consumer queries
+    # depend on which earlier query warmed a shared bounded_cache slot,
+    # so a rotating audit order would make the plan_regression fence
+    # flag phantom exchange diffs (round-12 postmortem). A stable order
+    # keeps the committed PLANS.md rows comparable.
     for name, fn in entry_mod._QUERIES.items():
         try:
             df = fn(spark, sf_dir)

@@ -15,7 +15,7 @@ The sf1 section covers the FULL registry by default (the committed
 artifact's scope); set SPARK_GRAFT_SF1_TOP=N to limit it to the N
 most expensive queries for a faster iteration run.
 Best-of-3 per (query, SF): this host shows bursty CPU contention; min
-is the interference-robust estimator (same policy as bench.py).
+is the interference-robust estimator.
 """
 
 from __future__ import annotations
